@@ -1,7 +1,7 @@
 package graft
 
-import graft.ops.Relational
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, sum}
 
 /** Benchmark main — warm SparkSession, 2 full-suite warm-up passes, then
   * 5 timed passes; session startup excluded. Prints ONE JSON line;
@@ -17,51 +17,40 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** The bench session, shared with [[graft.tools.Profile]] so the
-    * profiler measures the SAME engine config the bench runs — a
-    * profile under different knobs steers tuning at the wrong term.
-    * Env knobs: SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUF (600 k-row shuffles
-    * don't amortize 32 tasks' dispatch — 8 measured ~25% faster at
-    * sf0.1, see tools/Tune), SPARK_GRAFT_CACHE_BATCH /
-    * SPARK_GRAFT_CACHE_COMPRESSED (cache scan knobs),
-    * SPARK_GRAFT_MAXPART, and SPARK_GRAFT_CONF ("k=v;k=v" passthrough).
+  /** The bench session ([[ScaleConfig.bench]]), shared with
+    * [[graft.tools.Profile]] so the profiler measures the SAME engine
+    * config the bench runs — a profile under different knobs steers
+    * tuning at the wrong term. Cores come from `SPARK_GRAFT_CPUS` (see
+    * [[ScaleConfig.cores]]); the posture itself has no knobs.
     */
-  def session(): SparkSession = {
-    // r06 sweep on the refreshed corpus (suite totals, same session):
-    // local[4] 4.25s, local[8] 4.23s, local[16] 4.28s, local[32] 4.12s —
-    // all within VM noise; 32 was never worse across five comparisons
-    // and matches the target execution environment, so it is the default
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUF", "8")
-    val cacheBatch = sys.env.getOrElse("SPARK_GRAFT_CACHE_BATCH", "65536")
-    val cacheComp = sys.env.getOrElse("SPARK_GRAFT_CACHE_COMPRESSED", "false")
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAXPART", "4194304")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.inMemoryColumnarStorage.batchSize", cacheBatch)
-      .config("spark.sql.inMemoryColumnarStorage.compressed", cacheComp)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Micro-bench latency config (SURVEY.md §6): AQE's per-stage
-      // re-planning costs more than it saves at sub-second scale.
-      .config("spark.sql.adaptive.enabled", "false")
-      // single-node 128 GiB: broadcasting a 10-30 MB side within the JVM
-      // beats a shuffle; on a real cluster stats/AQE make this call
-      .config("spark.sql.autoBroadcastJoinThreshold", "33554432")
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => sys.error(
-            s"SPARK_GRAFT_CONF entry '$kv' is not k=v (expected 'k=v;k=v')")
-        }
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
+  def session(): SparkSession = ScaleConfig.session(ScaleConfig.bench)
+
+  /** Median of 11 timed runs of `probe`, after 2 untimed runs that warm
+    * its codegen. */
+  private def probeMedian(probe: () => Unit): Double = {
+    probe(); probe()
+    val ts = Seq.fill(11) {
+      val t0 = System.nanoTime()
+      probe()
+      (System.nanoTime() - t0) / 1e9
+    }
+    ts.sorted.apply(ts.size / 2)
   }
+
+  /** Per-query dispatch FLOOR (measured anatomy in BENCH_NOTES.md):
+    * local-mode Spark pays a fixed per-job cost — plan→RDD, codegen
+    * lookup, 2-stage scheduling, result fetch — that DuckDB's
+    * in-process executor doesn't. The probe is a `range(factRows).sum()`
+    * rebuilt fresh each rep, with `factRows` the ACTUAL fact-table row
+    * count of the corpus (so the premise scales with it): the same
+    * two-stage aggregate shape as the suite queries with ~1 ms of real
+    * compute — the JVM sums 600 k longs in ~0.2 ms, so the median IS the
+    * fixed job cost. Uniform across queries, amortizes to zero at the
+    * 100 TB design point.
+    */
+  def dispatchFloor(spark: SparkSession, factRows: Long): Double =
+    probeMedian(() =>
+      { spark.range(0, factRows, 1, 3).agg(sum(col("id"))).collect(); () })
 
   /** The 20 BASELINE.md headline queries (q32+ additions are not in the
     * baseline suite; including them would skew the comparison). */
@@ -112,34 +101,14 @@ object Bench {
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val total = medians.map(_._2).sum
 
-    // Per-query dispatch FLOOR (measured anatomy in BENCH_NOTES.md):
-    // local-mode Spark pays a fixed per-job cost — plan→RDD, codegen
-    // lookup, 2-stage scheduling, result fetch — that DuckDB's
-    // in-process executor doesn't. The probe is a `range(N).sum()`
-    // rebuilt fresh each rep, with N = the ACTUAL fact-table row count
-    // at this sf (so the premise scales with SPARK_GRAFT_SF_DIR): the
-    // same two-stage aggregate shape as the suite queries with ~1 ms
-    // of real compute — the JVM sums 600 k longs in ~0.2 ms, so the
-    // median IS the fixed job cost. Uniform across queries, amortizes
-    // to zero at the 100 TB design point. `value_over_floor` = suite
-    // total net of 20 floors, reported alongside the raw total so the
-    // gate comparison is explicit, not prose. The scan-only probe
-    // bounds the single-stage variant.
-    import org.apache.spark.sql.functions.{col, sum => fsum}
+    // `value_over_floor` = suite total net of 20 dispatch floors,
+    // reported alongside the raw total so the gate comparison is
+    // explicit, not prose. The scan-only probe bounds the single-stage
+    // variant.
     val region = Tables.load(spark, sfDir, "region")
     val factRows = Tables.load(spark, sfDir, "lineitem").count() // cached
-    def probeMedian(probe: () => Unit): Double = {
-      probe(); probe() // warm the probe's own codegen
-      val ts = Seq.fill(11) {
-        val t0 = System.nanoTime()
-        probe()
-        (System.nanoTime() - t0) / 1e9
-      }
-      ts.sorted.apply(ts.size / 2)
-    }
     val floorScan = probeMedian(() => { region.select(col("r_regionkey")).collect(); () })
-    val floor = probeMedian(() =>
-      { spark.range(0, factRows, 1, 3).agg(fsum(col("id"))).collect(); () })
+    val floor = dispatchFloor(spark, factRows)
     val overFloor = math.max(0.0, total - names.size * floor)
 
     // value/queries = per-BASELINE.md medians; *_min = noise floor on this

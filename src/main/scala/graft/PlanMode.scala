@@ -1,6 +1,8 @@
 package graft
 
-/** Plan-only switch for plan-dump tooling (r12, r11 ADVICE).
+import scala.util.DynamicVariable
+
+/** Plan-only scope for the plan dumper (r12, r11 ADVICE).
   *
   * Several operators persist a shared intermediate (exact-class frames,
   * member maps, cell counts) and eagerly `count()` it AT QUERY-BUILD
@@ -8,22 +10,26 @@ package graft
   * unmaterialized cache makes each racing consumer duplicate the full
   * upstream pass (measured in r11: seven racing ~40 s corpus aggregates
   * in q143 before the eager count). The side effect: merely BUILDING
-  * such a query executes jobs, so plan-dump tools (Plans / PlanOf /
-  * PlanSummary) silently paid full corpus aggregations per dump.
+  * such a query executes jobs, so a plan dump would silently pay full
+  * corpus aggregations per query.
   *
-  * Those tools set `planOnly = true`: the eager counts are skipped —
-  * building a query then runs no jobs — while every execution path
-  * (Bench, Verify, ScaleCheck, the pipeline) keeps the default `false`
-  * and the race-proof materialization.
+  * [[graft.tools.Plans]] builds its queries inside `planOnly { ... }`:
+  * the eager counts are skipped there — building a query then runs no
+  * jobs — while every other path (Bench, Verify, ScaleCheck, the
+  * pipeline), and all code outside the block, keeps the race-proof
+  * materialization. PlanModeSpec pins both sides.
   */
 object PlanMode {
-  @volatile var planOnly: Boolean = false
+  private val scope = new DynamicVariable(false)
 
-  /** Persist `df` and, unless in plan-only mode, materialize it now so
+  /** Runs `body` with eager materialization skipped on this thread. */
+  def planOnly[T](body: => T): T = scope.withValue(true)(body)
+
+  /** Persist `df` and, unless inside [[planOnly]], materialize it now so
     * concurrent consumers read the cache instead of racing to build it. */
   def eager[T](ds: org.apache.spark.sql.Dataset[T]): ds.type = {
     ds.persist()
-    if (!planOnly) ds.count()
+    if (!scope.value) ds.count()
     ds
   }
 }

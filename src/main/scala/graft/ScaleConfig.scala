@@ -3,15 +3,19 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
-/** The 100 TB posture, as code (SURVEY.md §4.3). Two profiles:
+/** Every main's SparkSession, from one factory. A posture is plain
+  * data, a list of conf pairs; a main names its posture and adds the few
+  * overrides it needs ([[shufflePartitions]], [[aqeOff]],
+  * [[broadcastOff]], [[nanosAsLong]]). The master is always
+  * `local[`[[cores]]`]`.
   *
-  *  - [[localBench]] — what the Bench/Verify mains use: AQE off (its
-  *    re-planning overhead exceeds its benefit at sub-second queries),
-  *    shuffle partitions sized to the data not the cores, generous
-  *    broadcast threshold inside one JVM.
-  *  - [[cluster]] — the settings this engine expects on a real cluster.
-  *    Applied via `SparkSession.Builder.config(...)`; they are defaults,
-  *    not magic: partition/bucket layout (see [[graft.sources.IO]]) and
+  *  - [[plain]]: UTC session time zone, UI off. Verify and the audit
+  *    tools.
+  *  - [[bench]]: the headline bench ([[graft.Bench.session]]), pinned
+  *    by BenchPostureSpec.
+  *  - [[cluster]]: the 100 TB posture (SURVEY.md §4.3), the settings
+  *    this engine expects on a real cluster. They are defaults, not
+  *    magic: partition/bucket layout (see [[graft.sources.IO]]) and
   *    operator shape (see PlanSpec ceilings) matter more.
   *
   * Cluster rationale, knob by knob:
@@ -31,12 +35,66 @@ import org.apache.spark.sql.functions.broadcast
   */
 object ScaleConfig {
 
-  def localBench(b: SparkSession.Builder, cores: Int, shufflePartitions: Int): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", (32 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+  type Posture = Seq[(String, String)]
+
+  // the overrides, declared before the postures that use them
+  def shufflePartitions(n: Int): (String, String) =
+    "spark.sql.shuffle.partitions" -> n.toString
+  val aqeOff: (String, String) = "spark.sql.adaptive.enabled" -> "false"
+  val broadcastOff: (String, String) = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+  /** Reads an int64-nanos timestamp column as a raw long. */
+  val nanosAsLong: (String, String) = "spark.sql.legacy.parquet.nanosAsLong" -> "true"
+
+  val plain: Posture = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  val bench: Posture = plain ++ Seq(
+    // 600 k-row shuffles don't amortize one task per core's dispatch
+    shufflePartitions(8),
+    "spark.sql.inMemoryColumnarStorage.batchSize" -> "65536",
+    "spark.sql.inMemoryColumnarStorage.compressed" -> "false",
+    "spark.sql.files.maxPartitionBytes" -> "4194304",
+    // micro-bench latency (SURVEY.md §6): AQE's per-stage re-planning
+    // costs more than it saves at sub-second scale
+    aqeOff,
+    // inside one JVM, broadcasting a 10-30 MB side beats a shuffle; on a
+    // real cluster stats/AQE make this call
+    "spark.sql.autoBroadcastJoinThreshold" -> "33554432")
+
+  val cluster: Posture = plain ++ Seq(
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256m",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "3",
+    shufflePartitions(4096),
+    "spark.sql.files.maxPartitionBytes" -> "128m",
+    "spark.sql.autoBroadcastJoinThreshold" -> "64m",
+    "spark.sql.parquet.filterPushdown" -> "true",
+    // stateful streaming at scale: RocksDB keeps per-executor state
+    // off-heap/on-disk with changelog checkpoints (vs the default
+    // HDFS-backed provider's full-snapshot-in-heap); required by
+    // transformWithState, strictly better for big flatMapGroupsWith
+    // State / dedupStream state too
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
+  /** Local cores: `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The session for `posture` plus `overrides` (later pairs win), on
+    * `local[cores]`, logging at ERROR. */
+  def session(posture: Posture, overrides: (String, String)*): SparkSession = {
+    val builder = SparkSession.builder().master(s"local[$cores]")
+    (posture ++ overrides).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
 
   /** Broadcast hint for DATA-SCALING build sides — sides derived from
     * corpus tables (a filtered customer dim, a distinct orders key set)
@@ -66,25 +124,4 @@ object ScaleConfig {
   def broadcastDisabled(spark: SparkSession): Boolean =
     spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
       .trim.startsWith("-")
-
-  def cluster(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256m")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "3")
-      .config("spark.sql.shuffle.partitions", "4096")
-      .config("spark.sql.files.maxPartitionBytes", "128m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // stateful streaming at scale: RocksDB keeps per-executor state
-      // off-heap/on-disk with changelog checkpoints (vs the default
-      // HDFS-backed provider's full-snapshot-in-heap); required by
-      // transformWithState, strictly better for big flatMapGroupsWith
-      // State / dedupStream state too
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ScaleConfig
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthetic scale amplifier (VERDICT r4 §next-round #2): replicates the
@@ -31,16 +32,11 @@ object Amplify {
     val outDir = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = ScaleConfig.session(ScaleConfig.plain,
+      ScaleConfig.shufflePartitions(ScaleConfig.cores),
       // tolerate an int64-nanos events.ts (pre-round-5 corpus); the
       // column is round-tripped raw either way
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+      ScaleConfig.nanosAsLong)
     spark.sparkContext.setLogLevel("WARN")
 
     def raw(name: String): DataFrame = spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,9 +1,9 @@
 package graft.tools
 
-import graft.Tables
+import graft.{ScaleConfig, Tables}
 import graft.vector.{Pq, Similarity}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN quality/latency evidence as an artifact: at a given sf, take the
@@ -28,13 +28,7 @@ object AnnAudit {
     val outJson = if (args.length > 1) args(1) else "/tmp/ann_audit.json"
     val k = if (args.length > 2) args(2).toInt else 10
     val nq = if (args.length > 3) args(3).toInt else 50
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleConfig.session(ScaleConfig.plain, ScaleConfig.shufflePartitions(16))
 
     val emb = Tables.load(spark, sfDir, "embeddings").persist()
     val n = emb.count()

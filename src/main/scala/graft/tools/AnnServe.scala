@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{ScaleConfig, Tables}
 import graft.vector.Similarity
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the [[Similarity.lshIndex]] amortization claim: at corpus
@@ -19,13 +18,7 @@ object AnnServe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val outJson = if (args.length > 1) args(1) else "/tmp/ann_serve.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.ScaleConfig.cluster(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleConfig.session(ScaleConfig.cluster, ScaleConfig.shufflePartitions(64))
 
     val emb = Tables.load(spark, dir, "embeddings").persist()
     val n = emb.count()

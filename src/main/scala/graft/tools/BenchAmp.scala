@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Bench, SparkEntry, Tables}
+import graft.{Bench, ScaleConfig, SparkEntry, Tables}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
@@ -38,17 +38,11 @@ object BenchAmp {
     val ampDir = if (args.nonEmpty) args(0) else "/tmp/amp10"
     val outJson = if (args.length > 1) args(1) else "/tmp/benchamp.json"
     val sessions = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val allNames = Bench.headlineNames
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
 
     def oneSession(): (Map[String, Double], Double, Boolean) = {
-      val spark = graft.ScaleConfig.cluster(SparkSession.builder())
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = ScaleConfig.session(ScaleConfig.cluster, ScaleConfig.shufflePartitions(64))
       Tables.names.foreach { n =>
         try Tables.load(spark, ampDir, n).persist().count()
         catch { case e: Throwable =>
@@ -78,7 +72,6 @@ object BenchAmp {
       // cost. Run INSIDE each session, so a host-drift session move is
       // attributable in-artifact (over-floor totals separate "the VM got
       // slower at dispatching jobs" from "a query's compute regressed").
-      import org.apache.spark.sql.functions.{col, sum => fsum}
       // NonFatal only (r10 ADVICE): a fatal error (OOM) must crash the
       // run, not silently masquerade as a default floor; and a defaulted
       // factRows makes session floors cross-round incomparable, so the
@@ -94,13 +87,7 @@ object BenchAmp {
           floorRowsDefaulted = true
           6000000L
         }
-      def probe(): Unit =
-        { spark.range(0, factRows, 1, 3).agg(fsum(col("id"))).collect(); () }
-      probe(); probe()
-      val floorTs = Seq.fill(11) {
-        val t0 = System.nanoTime(); probe(); (System.nanoTime() - t0) / 1e9
-      }
-      val floor = floorTs.sorted.apply(floorTs.size / 2)
+      val floor = Bench.dispatchFloor(spark, factRows)
       spark.stop()
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{ScaleConfig, SparkEntry, Verify}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Verify-style dump for the no-broadcast (100 TB-regime) join battery
   * (VERDICT r4 §next-round #1): runs the six join-heavy inventory
@@ -24,15 +23,9 @@ object NoBroadcastVerify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
+    val spark = ScaleConfig.session(ScaleConfig.plain,
+      ScaleConfig.shufflePartitions(ScaleConfig.cores), ScaleConfig.broadcastOff,
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
@@ -52,18 +45,7 @@ object NoBroadcastVerify {
     Files.writeString(Paths.get(s"$outDir/nobroadcast_plans.json"),
       planFacts.mkString("{", ",\n ", "}"))
 
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(e => queries.contains(e._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleSql(outDir, queries.contains)
     println(s"dumped ${queries.size} queries under autoBroadcastJoinThreshold=-1 to $outDir")
     spark.stop()
   }

@@ -63,8 +63,8 @@ object Profile {
       val a = nowMs
       SparkEntry.queries(n)(spark, sfDir).collect()
       val w = nowMs - a
-      Thread.sleep(300) // let the listener bus drain
-      // drain a SNAPSHOT: late events (bus backlog > the sleep) belong
+      ListenerDrain.await(stages.size)
+      // drain a SNAPSHOT: late events (bus backlog > the wait) belong
       // to this query but would otherwise leak into the next window
       val drained = Iterator.continually(stages.poll()).takeWhile(_ != null).toList
       val (nt, sw, run, de, gc) = drained.foldLeft((0, 0L, 0L, 0L, 0L)) {

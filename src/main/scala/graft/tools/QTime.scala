@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, ScaleConfig, SparkEntry, Tables}
 
 /** Ad-hoc single-query timer for scale-fix verification: runs the named
   * registry queries against a corpus dir under the cluster posture
@@ -14,13 +13,7 @@ object QTime {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.ScaleConfig.cluster(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleConfig.session(ScaleConfig.cluster, ScaleConfig.shufflePartitions(64))
     Tables.names.foreach(n => Tables.load(spark, dir, n).persist().count())
     // burn-in: absorb the cache-materialization eviction/GC churn before
     // anything is timed (the ScaleCheck discipline — without it the
@@ -29,15 +22,8 @@ object QTime {
     // per-SESSION dispatch-floor probe (the Bench/BenchAmp shape), so a
     // flagged-row re-measure carries its own drift normalizer — the
     // r9-verdict protocol for adjudicating ScaleCheck superlinear flags
-    import org.apache.spark.sql.functions.{col, sum => fsum}
     val factRows = Tables.load(spark, dir, "lineitem").count()
-    def probe(): Unit =
-      { spark.range(0, factRows, 1, 3).agg(fsum(col("id"))).collect(); () }
-    probe(); probe()
-    val floorTs = Seq.fill(11) {
-      val t0 = System.nanoTime(); probe(); (System.nanoTime() - t0) / 1e9
-    }
-    println(f"floor_per_query ${floorTs.sorted.apply(floorTs.size / 2)}%8.3f s")
+    println(f"floor_per_query ${Bench.dispatchFloor(spark, factRows)}%8.3f s")
     // QTIME_STAGES=1: per-stage task metrics for the TIMED pass (the
     // guide-§7 attribution view — which stage, how many tasks, executor
     // run vs wall), so a flagged query's cost lands on an operator
@@ -66,16 +52,7 @@ object QTime {
       val rows = fn(spark, dir).collect().length
       println(f"$name%-30s ${(System.nanoTime() - t0) / 1e9}%8.2f s   rows=$rows")
       if (dumpStages) {
-        // listener-bus drain: poll until the queue stops growing for two
-        // consecutive intervals (r11 ADVICE — a fixed 500 ms sleep could
-        // miss the largest stages' events on a loaded machine;
-        // listenerBus.waitUntilEmpty is not public API), capped at 5 s
-        var (prev, stable, waited) = (-1, 0, 0)
-        while (stable < 2 && waited < 5000) {
-          Thread.sleep(250); waited += 250
-          val n = stages.size
-          if (n == prev) stable += 1 else { stable = 0; prev = n }
-        }
+        ListenerDrain.await(stages.size)
         Iterator.continually(stages.poll()).takeWhile(_ != null).toList
           .sortBy(-_._3).take(12).foreach { case (id, nt, wall, run, nm) =>
             println(f"    stage $id%4d tasks=$nt%4d wall=$wall%7d ms run=$run%8d ms  $nm")

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
+import graft.{ScaleConfig, SparkEntry, Tables}
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Scale-regime plan evidence (VERDICT r4 §next-round #2): runs the 20
   * headline queries plus the six join-battery queries against an
@@ -91,16 +90,10 @@ object ScaleCheck {
         """"(q\w+)":\s*\{"sec":\s*([0-9.]+)""".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
       } else Map.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = graft.ScaleConfig.cluster(SparkSession.builder())
-      .master(s"local[$cpus]")
-      // the cluster default (4096) targets 100 TB shuffles; at a 160 MB
-      // local corpus AQE would coalesce every stage anyway — 64 keeps
-      // the scheduler overhead honest without changing plan shapes
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the cluster default (4096) targets 100 TB shuffles; at a 160 MB
+    // local corpus AQE would coalesce every stage anyway — 64 keeps
+    // the scheduler overhead honest without changing plan shapes
+    val spark = ScaleConfig.session(ScaleConfig.cluster, ScaleConfig.shufflePartitions(64))
 
     Tables.names.foreach(n => Tables.load(spark, dir, n).persist().count())
     // burn-in: at 100x the ~20 GB cache materialization leaves several

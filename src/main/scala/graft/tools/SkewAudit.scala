@@ -1,10 +1,9 @@
 package graft.tools
 
-import graft.Tables
+import graft.{ScaleConfig, Tables}
 import graft.ops.Skew
 import java.nio.file.{Files, Paths}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measured skew evidence (the "skewed keys → salting" design bullet):
@@ -40,15 +39,9 @@ object SkewAudit {
       else "/root/testdata/sf0.1"
     val outJson = if (args.length > 1) args(1) else "/tmp/skew_audit.json"
     val hotPct = if (args.length > 2) args(2).toInt else 40
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "false") // measure the raw shuffle
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // AQE off to measure the raw shuffle
+    val spark = ScaleConfig.session(ScaleConfig.plain, ScaleConfig.shufflePartitions(32),
+      ScaleConfig.aqeOff, ScaleConfig.broadcastOff)
 
     // hotPct% of rows land on user 0 — a power-law hot key
     val ev = Tables.load(spark, srcDir, "events")
@@ -70,8 +63,7 @@ object SkewAudit {
       val t0 = System.nanoTime()
       body
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener delivery is async
-      Thread.sleep(500)
+      ListenerDrain.await(stats.durations.size)
       spark.sparkContext.removeSparkListener(stats)
       import scala.jdk.CollectionConverters._
       val byStage = stats.durations.asScala.toSeq.groupBy(_._1)

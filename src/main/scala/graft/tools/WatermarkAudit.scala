@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{ScaleConfig, Tables}
 import graft.streaming.StreamingOps
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** A9 late-data evidence as an artifact (VERDICT r5 §8): the corpus'
@@ -30,13 +29,7 @@ object WatermarkAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outJson = if (args.length > 1) args(1) else "/tmp/watermark_audit.json"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleConfig.session(ScaleConfig.plain, ScaleConfig.shufflePartitions(8))
 
     val ev = Tables.load(spark, sfDir, "events").persist()
     val inputRows = ev.count()

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
-"""Diff two PlanSummary artifacts: prints every query whose plan-shape
-counters differ (or that exists in only one file). Empty output = the
-two snapshots planned every common query identically.
+"""Diff two plan summaries (`graft.tools.Plans summary`): prints every
+query whose plan-shape counters differ (or that exists in only one
+file). Empty output = the two snapshots planned every common query
+identically.
 
 Usage: python3 tools/plan_diff.py <old.json> <new.json>
 """
