@@ -1,10 +1,11 @@
 package graft.examples
 
-import graft.Tables
+import graft.{ScaleConfig, Tables}
 import graft.ops.{Curation, Drift, Selection, Validate}
 import graft.text.{Dedup, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.spype.LineageCut
 
 /** The full training-data path, end to end, on the public API:
   *
@@ -62,6 +63,20 @@ object PretrainPipeline {
     */
   def runDetailed(spark: SparkSession, rawDocs: DataFrame,
       deadLetterDir: Option[String] = None): Seq[Stage] = {
+    // Stage boundaries, one rule: the output of each expensive stage
+    // (the LM gate, dedup, both decontamination passes, the cap, the
+    // mix) is a LineageCut. It is computed once, later stages plan from
+    // a leaf scan of it, and that leaf matches its own copies, so
+    // self-joins downstream reuse exchanges and hit caches. A persist
+    // would leave the whole upstream plan for every later action to
+    // analyse and match against the cache (measured at sf0.1 on 4
+    // cores: persisting the first five of these cuts instead costs
+    // 12 % of pipeline throughput). Cheap filters over a cut
+    // (`trimmed`, the folds) stay lazy. Shallow frames with several
+    // readers (`q`, `quality`, `bench`) are persisted: their plans are
+    // short, and a persist runs no job of its own. Everything pinned is
+    // freed before the run returns. On a cluster, cut to a reliable
+    // checkpoint dir instead, as Dedup.connectedComponents documents.
     val stats = Seq.newBuilder[Stage]
     var t0 = System.nanoTime()
     def rec(name: String, rows: Long, tokens: Long = -1L): Unit = {
@@ -120,14 +135,12 @@ object PretrainPipeline {
     //     is deterministic at any parallelism.
     val lmScores = Selection.lmScore(quality, Seq("doc_id"), "text",
       refFilter = lit(true))
-    // persisted: every downstream stage action replays its lineage, and
-    // replaying the LM build + scoring join per stage would multiply the
-    // whole pipeline's cost ~7x (measured). Unpersisted at the end.
-    val lmKept = quality.join(
+    // cut: replaying the LM build + scoring join per downstream action
+    // would multiply the whole pipeline's cost ~7x (measured)
+    val lmKept = LineageCut(quality.join(
       lmScores.filter(col("__nll") <= lit(3496508L) * col("__nb"))
         .select("doc_id"),
-      Seq("doc_id"))
-      .persist()
+      Seq("doc_id")))
     recDf("lm_quality", lmKept)
     quality.unpersist(blocking = false)
 
@@ -135,21 +148,9 @@ object PretrainPipeline {
     val trimmed = Curation.quantileBand(lmKept, "n_chars", 0.05, 0.95)
     recDf("trimmed", trimmed)
 
-    // Persist discipline from here down (r9, VERDICT r8 #6): each stage
-    // below both COUNTS its frame and feeds the next stage, so an
-    // unpersisted stage replays its whole upstream lineage once per
-    // downstream action — at r8 geometry `capped` and `mixed` each
-    // re-ran the dedup + double-decontamination chain (the 16.1 s
-    // "mixed" stage was ~2 chain replays plus its own work). Boundaries
-    // sit only at REDUCED frames (post-dedup/post-cap) and the
-    // eval-suite-sized bench slice: corpus-grain frames stay
-    // unpersisted, because at 100 TB re-scanning columnar parquet is
-    // cheaper than pinning the raw corpus in executor memory.
-
     // 3. near-dup cluster dedup: transitive chains collapse, best doc wins
     val pairs = Dedup.ngramJaccard(trimmed, "doc_id", "text", 3, 0.5)
-    val deduped = Dedup.dedupByCluster(trimmed, pairs, "doc_id", "n_chars")
-      .persist()
+    val deduped = LineageCut(Dedup.dedupByCluster(trimmed, pairs, "doc_id", "n_chars"))
     recDf("deduped", deduped)
 
     // 4. decontaminate against the held-out benchmark slice — exact
@@ -158,18 +159,16 @@ object PretrainPipeline {
     //    slice is the broadcast side of BOTH passes — persisted so its
     //    shingle/banding build runs once, not once per consumer action.
     val bench = docs.filter(pmod(col("doc_id"), lit(7)) === 0).persist()
-    val exactClean = Dedup.decontaminate(
+    val exactClean = LineageCut(Dedup.decontaminate(
       deduped.filter(pmod(col("doc_id"), lit(7)) =!= 0), bench,
-      "doc_id", "text", n = 8).persist()
+      "doc_id", "text", n = 8))
     recDf("decontaminated", exactClean)
-    val clean = Dedup.decontaminateFuzzy(exactClean, bench,
-      "doc_id", "text", shingleLen = 3, b = 16, r = 4, threshold = 0.8)
-      .persist()
+    val clean = LineageCut(Dedup.decontaminateFuzzy(exactClean, bench,
+      "doc_id", "text", shingleLen = 3, b = 16, r = 4, threshold = 0.8))
     recDf("decontaminated_fuzzy", clean)
 
     // 4b. domain cap: no source may dominate what the mixer sees
-    val capped = Curation.capPerSource(clean, "source", "doc_id", cap = 20)
-      .persist()
+    val capped = LineageCut(Curation.capPerSource(clean, "source", "doc_id", cap = 20))
     recDf("capped", capped)
 
     // 5. resample surviving sources to a uniform token mixture
@@ -177,20 +176,8 @@ object PretrainPipeline {
       .collect().map(_.getString(0)).sorted
     val weights = srcs.map(_ -> 1.0 / srcs.length).toMap
     val u = pmod(col("doc_id") * lit(2654435761L), lit(1000000L))
-    // localCheckpoint, not persist: `mixed` is consumed by three audits,
-    // three folds, packing and the shard write, and by this point the
-    // LOGICAL plan is the whole pipeline's lineage (hundreds of nodes,
-    // several joins/windows deep). Every downstream action would pay
-    // driver-side Catalyst work (analysis + CacheManager sameResult
-    // matching against every cached entry) on that full tree — measured
-    // r9: with 7 cache boundaries live, the three audit stages ran
-    // 24/46/73 s at sf0.1 where the DATA work is milliseconds. The
-    // checkpoint truncates lineage to a leaf scan, so downstream plans
-    // are tiny regardless of how deep the pipeline grew (the
-    // connectedComponents discipline). On a cluster, swap for a
-    // reliable checkpoint dir exactly as cc documents.
-    val mixed = Curation.sourceMix(capped, "source", "n_tok", weights, u)
-      .localCheckpoint()
+    // cut: three audits, three folds, packing and the shard write read it
+    val mixed = LineageCut(Curation.sourceMix(capped, "source", "n_tok", weights, u))
     recDf("mixed", mixed)
 
     // 5b. mix audit: before committing the blend, score each surviving
@@ -241,17 +228,14 @@ object PretrainPipeline {
     shuffled.write.mode("overwrite").parquet(out)
     rec("shard_files", new java.io.File(out).listFiles()
       .count(_.getName.endsWith(".parquet")).toLong)
-    Seq(lmKept, deduped, bench, exactClean, clean, capped)
-      .foreach(_.unpersist(blocking = false))
+    bench.unpersist(blocking = false)
+    LineageCut.release(lmKept, deduped, exactClean, clean, capped, mixed)
     stats.result()
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ScaleConfig.session(ScaleConfig.plain,
+      ScaleConfig.shufflePartitions(ScaleConfig.cores))
     run(spark, "/root/testdata/sf0.001").foreach { case (k, v) =>
       println(f"$k%-16s $v")
     }

@@ -4,6 +4,7 @@ import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.spype.LineageCut
 
 /** Graph and statistical-dependence analytics (SURVEY.md §2.3.1
   * extensions, q107–q112): market-basket association rules, triangle
@@ -166,8 +167,7 @@ object Graph {
     // edges from a basket co-count aggregate) would otherwise be
     // re-derived per read (see kHopDistances for the cluster
     // checkpoint note)
-    val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .localCheckpoint()
+    val e = LineageCut(edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
     val tri = e
       .join(e.select(col("a").as("b"), col("b").as("c")), "b")
       .join(e.select(col("a"), col("b").as("c")), Seq("a", "c"))
@@ -191,20 +191,19 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 12, s"maxHops must be in 1..12: $maxHops")
     // materialize the edge relation once and truncate lineage per
     // iteration — without this every hop's plan re-derives the edges
-    // and the final plan is O(maxHops × |edge plan|). localCheckpoint
-    // trades fault tolerance for speed; a cluster job pointing at
-    // 100 TB should setCheckpointDir and use reliable checkpoint()
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .localCheckpoint()
+    // and the final plan is O(maxHops × |edge plan|). The cut (a local
+    // checkpoint) trades fault tolerance for speed; a cluster job
+    // pointing at 100 TB should setCheckpointDir and use reliable
+    // checkpoint()
+    val e = LineageCut(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d")))
     var dist = e.sparkSession.range(1)
       .select(source.as("node"), lit(0).as("dist"))
     for (hop <- 1 to maxHops) {
       val next = dist.filter(col("dist") === hop - 1)
         .join(e, col("node") === col("__s"))
         .select(col("__d").as("node"), lit(hop).as("dist"))
-      dist = dist.union(next)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+      dist = LineageCut(dist.union(next)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist")))
     }
     dist
   }
@@ -331,11 +330,9 @@ object Graph {
     // edges and the vertex set are reused every iteration and the rank
     // state is checkpointed per step — otherwise the final lineage is
     // O(iters × |edge plan|) (see kHopDistances for the cluster note).
-    // r12 (guide §3.1): a checkpoint loses stats (LogicalRDD defaults
-    // to defaultSizeInBytes), so the per-iteration state⋈edges joins
-    // all planned SMJ — every half-step re-shuffled AND re-sorted the
-    // edge list (exchange reuse never spans checkpoint jobs). The
-    // |V|-row state / contribution frames now carry posture-aware
+    // r12 (guide §3.1): the per-iteration state⋈edges joins planned
+    // SMJ, so every half-step re-shuffled AND re-sorted the edge list.
+    // The |V|-row state / contribution frames now carry posture-aware
     // broadcast hints (the no-broadcast regime degrades back to SMJ,
     // see ScaleConfig.scalingBroadcast): the edge list streams through
     // a hash probe un-sorted and un-shuffled, and only the ≤|V|-row
@@ -346,9 +343,9 @@ object Graph {
     // checkpoint + collect jobs cost more dispatch than the removed
     // exchanges saved; amp100 fresh-JVM q112 3.2 s → 5.0 s — and was
     // dropped.)
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      col(wCol).as("__w")).localCheckpoint()
-    val v = nodes.select(col(nodeCol).as("node")).distinct().localCheckpoint()
+    val e = LineageCut(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
+      col(wCol).as("__w")))
+    val v = LineageCut(nodes.select(col(nodeCol).as("node")).distinct())
     val nN = v.count()
     var ranks = v.withColumn("rank", lit(1.0 / nN))
     for (_ <- 1 to iters) {
@@ -356,12 +353,11 @@ object Graph {
           col("node") === col("__s"))
         .groupBy(col("__d").as("node"))
         .agg(sum(col("rank") * col("__w")).as("__m"))
-      ranks = v.join(graft.ScaleConfig.scalingBroadcast(contrib),
+      ranks = LineageCut(v.join(graft.ScaleConfig.scalingBroadcast(contrib),
           Seq("node"), "left")
         .select(col("node"),
           (lit((1.0 - d) / nN) + lit(d) * coalesce(col("__m"), lit(0.0)))
-            .as("rank"))
-        .localCheckpoint()
+            .as("rank")))
     }
     ranks
   }
@@ -651,9 +647,9 @@ object Graph {
       nodes: DataFrame, nodeCol: String, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in 1..50: $iters")
     // r12 (guide §3.1, same surgery as [[pageRank]]): posture-aware
-    // broadcast hints on the |V|-row state / contribution frames — the
-    // old form's checkpoints lost stats, so all six half-steps planned
-    // SMJ and re-shuffled + re-sorted the edge list each time. The
+    // broadcast hints on the |V|-row state / contribution frames — in
+    // the old form all six half-steps planned SMJ and re-shuffled +
+    // re-sorted the edge list each time. The
     // checkpoint now materializes the RAW half-step state and the L1
     // normalization is a lazy projection over it (divided values
     // bit-identical — same operands), so `normalized`'s old
@@ -662,22 +658,21 @@ object Graph {
     // checkpointed frame itself. (A further variant with per-group-key
     // edge copies + driver-collected tot was measured SLOWER — see the
     // pageRank note — and dropped.)
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
-      col(wCol).as("__w")).localCheckpoint()
-    val v = nodes.select(col(nodeCol).as("node")).distinct().localCheckpoint()
+    val e = LineageCut(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"),
+      col(wCol).as("__w")))
+    val v = LineageCut(nodes.select(col(nodeCol).as("node")).distinct())
     // one half-step: edges ⋈ broadcast state → aggregate → left-attach
     // to v (keeps zero-in/out nodes) → checkpoint raw → lazily
     // L1-normalize by the 1-row total of the CHECKPOINTED frame
     def halfStep(state: DataFrame, stateCol: String,
         joinKey: String, groupKey: String, outCol: String): DataFrame = {
-      val raw = v.join(graft.ScaleConfig.scalingBroadcast(
+      val raw = LineageCut(v.join(graft.ScaleConfig.scalingBroadcast(
           e.join(graft.ScaleConfig.scalingBroadcast(state),
               col("node") === col(joinKey))
             .groupBy(col(groupKey))
             .agg(sum(col(stateCol) * col("__w")).as("__m"))),
           col("node") === col(groupKey), "left")
-        .select(col("node"), coalesce(col("__m"), lit(0.0)).as(outCol))
-        .localCheckpoint()
+        .select(col("node"), coalesce(col("__m"), lit(0.0)).as(outCol)))
       val tot = raw.agg(sum(col(outCol)).as("__t"))
       raw.crossJoin(broadcast(tot))
         .select(col("node"), (col(outCol) / col("__t")).as(outCol))
@@ -728,7 +723,7 @@ object Graph {
     * at |nodes| rows), one global aggregate, ONE row out.
     */
   def assortativityQuery(spark: SparkSession, dir: String): DataFrame = {
-    val e = brandEdges(spark, dir).localCheckpoint()
+    val e = LineageCut(brandEdges(spark, dir))
     val sym = e.union(e.select(col("b").as("a"), col("a").as("b")))
     val deg = sym.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))
@@ -761,7 +756,7 @@ object Graph {
     * list; cc is ONE division; deg ≤ 1 nodes are null, never NaN.
     */
   def clusteringQuery(spark: SparkSession, dir: String): DataFrame = {
-    val e = brandEdges(spark, dir).localCheckpoint()
+    val e = LineageCut(brandEdges(spark, dir))
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))

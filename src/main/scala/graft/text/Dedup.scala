@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.spype.LineageCut
 
 /** Deduplication operators for large-scale training-data pipelines.
   *
@@ -563,19 +564,22 @@ object Dedup {
     * own id; every iteration takes the min of its own and its
     * neighbors' labels; fixpoint = every node holds its component's
     * minimum id. Each iteration is one keyed shuffle (edges ⋈ labels +
-    * groupBy) and lineage is truncated per iteration with
-    * `localCheckpoint` so the plan stays bounded. Iterations needed =
-    * component diameter — near-dup graphs are clique-ish (tiny
-    * diameter), so convergence is fast; `maxIters` only guards
-    * pathological chains.
+    * groupBy) and lineage is truncated per iteration so the plan stays
+    * bounded; each superseded iteration's labels are freed at once.
+    * Iterations needed = component diameter — near-dup graphs are
+    * clique-ish (tiny diameter), so convergence is fast; `maxIters` only
+    * guards pathological chains.
     *
     * `checkpointDir` selects the truncation mode: `None` (default)
-    * uses `localCheckpoint` — fastest, but blocks live on executors,
-    * so ONE lost executor forces the whole job to restart (fine in
-    * local mode / short jobs). At cluster scale pass a reliable
-    * HDFS/S3 path: iterations then `checkpoint()` to durable storage
-    * and an hours-long 100 TB dedup survives executor loss. The dir is
-    * set once per SparkContext (a pre-set dir is respected).
+    * uses a [[org.apache.spark.sql.spype.LineageCut]] — fastest, but
+    * blocks live on executors, so ONE lost executor forces the whole
+    * job to restart (fine in local mode / short jobs). Its leaf is
+    * plan-matchable, so a consumer that reads the labels twice (the
+    * dedup survivors do) still hits caches and reuses exchanges. At
+    * cluster scale pass a reliable HDFS/S3 path: iterations then
+    * `checkpoint()` to durable storage and an hours-long 100 TB dedup
+    * survives executor loss. The dir is set once per SparkContext (a
+    * pre-set dir is respected).
     *
     * @return (id, cluster_id) — one row per node that appears in
     *         `pairs`; cluster_id = min id of its component.
@@ -616,10 +620,12 @@ object Dedup {
         r.foreachPartition(_ => ()) // materialize + write the checkpoint now
         r.unpersist(blocking = false) // reads now come from reliable storage
         (session.createDataFrame(r, df.schema), r.getCheckpointFile)
-      } else (df.localCheckpoint(), None)
-    def dropCheckpoint(file: Option[String]): Unit = file.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+      } else (LineageCut(df), None)
+    def drop(labels: DataFrame, file: Option[String]): Unit = file match {
+      case Some(f) =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+      case None => LineageCut.release(labels)
     }
     val sym = pairs.select(col(idACol).as("src"), col(idBCol).as("dst"))
       .unionByName(pairs.select(col(idBCol).as("src"), col(idACol).as("dst")))
@@ -643,8 +649,7 @@ object Dedup {
         .join(labels.withColumnRenamed("cluster_id", "prev"), Seq("id"))
         .filter(col("cluster_id") < col("prev"))
         .limit(1).count()
-      labels.unpersist()
-      dropCheckpoint(labelsCkpt) // superseded: next is durable, changed computed
+      drop(labels, labelsCkpt) // superseded: next is materialized, changed computed
       labels = next
       labelsCkpt = nextCkpt
       converged = changed == 0
